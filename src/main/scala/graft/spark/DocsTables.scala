@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Deterministic synthesis of the interleaved `docs` input table
   * (doc_id, spans array<struct<kind,text,media_ref,offset>>) from the
@@ -39,15 +40,22 @@ object DocsTables {
     val plan = df.queryExecution.optimizedPlan
     val isCached = plan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+    // a check that throws falls back to no fan-out, with one line of trace
+    def declined[T](what: String, fallback: T)(check: => T): T =
+      try check catch {
+        case NonFatal(e) =>
+          System.err.println(s"DocsTables.fanOut: $what failed ($e); not fanning out")
+          fallback
+      }
     val nFiles =
       if (isCached) Int.MaxValue
-      else try df.inputFiles.length catch { case _: Throwable => Int.MaxValue }
+      else declined("input file listing", Int.MaxValue)(df.inputFiles.length)
     // size cap: file COUNT under-approximates split count for big files (a
     // few 1 GB files still split into many scan tasks), so the guard only
     // fires for scans small enough that the round-robin shuffle is
     // trivially cheap — which is exactly the regime it exists for
     val small = nFiles > 0 && nFiles < p &&
-      (try plan.stats.sizeInBytes < (256L << 20) catch { case _: Throwable => false })
+      declined("size estimate", false)(plan.stats.sizeInBytes < (256L << 20))
     if (small) df.repartition(p) else df
   }
 

@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.extract.{Deduplicator, ExtractedDoc, Extraction, ExtractorOptions}
 import graft.out.Serializers.Span
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Input row: the Iceberg-style interleaved document (BASELINE.json
@@ -31,10 +31,10 @@ final case class ResultRow(
   * Scale design (local[32] here; 1000-executor story):
   *  - the kernel is per-row pure Scala — embarrassingly parallel, no shuffle
   *    besides the explicit doc_id repartition for balanced task sizes;
-  *  - mega-document skew (north rule) is routed explicitly: rows heavier than
-  *    `skewThreshold` bytes are split into their own single-doc partitions so
-  *    one 100 MB page cannot stall a 128 MB-input task (AQE cannot re-plan a
-  *    map-only stage);
+  *  - mega-document skew (north rule) is routed explicitly: one exchange
+  *    sends rows heavier than `skewThreshold` bytes to their own set of
+  *    partitions, apart from the bulk, so one 100 MB page cannot stall a
+  *    128 MB-input task (AQE cannot re-plan a map-only stage);
   *  - per-partition LRU dedup state lives inside the partition iterator,
   *    matching the reference's per-process cache semantics (SURVEY §7.4.3).
   */
@@ -86,38 +86,38 @@ object ExtractPipeline {
       val opts =
         if (options.dedup) options.copy(dedupCache = new Deduplicator())
         else options
-      iter.map { row => ExtractPipeline.kernelDocCount.increment(); extractRow(row, opts) }
+      iter.map(extractRow(_, opts))
     }
   }
 
-  /** DIAGNOSTIC (meaningful in local mode only): docs processed by
-    * extractDocs since JVM start — lets probes count kernel executions
-    * (ProbePipe used it to prove the pipeline cache is hit: 5000 docs on
-    * build, 0 on every action). LongAdder: no shared-cache-line contention
-    * in the kernel hot path (~ns per doc vs ~60 µs of kernel work). */
-  val kernelDocCount = new java.util.concurrent.atomic.LongAdder
-
-  /** Skew-aware variant: docs whose html payload exceeds `skewThresholdBytes`
-    * are pulled into a salted, per-doc-balanced set of partitions; the bulk
-    * path stays on the doc_id-hash layout. Both paths are one map stage. */
+  /** Skew-aware variant: one exchange routes every doc by id. Docs whose
+    * span text exceeds `skewThresholdBytes` go to partitions `[n, 2n)`, the
+    * bulk to `[0, n)`, both by `pmod(hash(doc_id), n)` — the doc_id-hash
+    * layout of a plain `repartition(n, doc_id)`, so a heavy doc never
+    * shares a task with the bulk. The weight is computed once per row in
+    * the partition-id expression; the kernel runs after the exchange, as
+    * one map stage over all 2n partitions. */
   def extractDocsSkewAware(ds: Dataset[DocRow], options: ExtractorOptions,
       skewThresholdBytes: Int = 1 << 20, bulkPartitions: Int = 0): Dataset[ResultRow] = {
-    import ds.sparkSession.implicits._
-    val spark = ds.sparkSession
-    val shufflePartitions = if (bulkPartitions > 0) bulkPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val weighted = ds.withColumn("_w",
-      aggregate(col("spans"), lit(0L), (acc, s) => acc + coalesce(length(s.getField("text")), lit(0))))
-    val small = weighted.filter(col("_w") <= skewThresholdBytes).drop("_w").as[DocRow]
-    val big = weighted.filter(col("_w") > skewThresholdBytes).drop("_w").as[DocRow]
-    val smallOut = extractDocs(
-      small.repartition(shufflePartitions, col("doc_id")), options)
-    // round-robin the heavy docs so each lands in its own task
-    val bigOut = extractDocs(big.repartition(shufflePartitions), options)
-    smallOut.unionAll(bigOut)
+    val n = if (bulkPartitions > 0) bulkPartitions
+      else ds.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val w = aggregate(col("spans"), lit(0L),
+      (acc, s) => acc + coalesce(length(s.getField("text")), lit(0)))
+    val slot = pmod(hash(col("doc_id")), lit(n))
+    extractDocs(ds.repartitionById(2 * n, when(w > skewThresholdBytes, slot + n).otherwise(slot)),
+      options)
   }
 
   // ------------------------------------------------------------- commit log
+
+  /** Manifests are written by a JSON library, so every string field (an
+    * output path may hold any character) is escaped. */
+  private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper
+
+  /** `path` as a Hadoop glob pattern that matches only itself: Spark globs
+    * every path it reads, and an output directory may hold `\`, `[` or `*`. */
+  private def literalGlob(path: String): String =
+    path.replaceAll("""([\\{}\[\]*?])""", """\\$1""")
 
   /** Iceberg-snapshot emulation (no Iceberg jar in /opt/spark/jars): the run
     * is split into `buckets` by hash(doc_id); each bucket is written to its
@@ -133,8 +133,14 @@ object ExtractPipeline {
     * table. `htmlBackup=true` adds a SECOND read of the bucket for the
     * backup write (2/buckets per pass): re-reading the pruned parquet keeps
     * the memory profile flat, vs. caching a whole bucket of raw pages to
-    * save a scan. Each manifest records the pruned path + files read. */
-  /** `htmlBackup=true` mirrors the reference's HTML backup sink
+    * save a scan. Each manifest records the pruned path + files read.
+    *
+    * Job economics: the manifest metrics (docs, ok, spans, kernel_us) are
+    * observed by the write job itself (`Dataset.observe`), so a bucket runs
+    * one job for the write — two with the skew router's exchange — and no
+    * read-back of what it wrote.
+    *
+    * `htmlBackup=true` mirrors the reference's HTML backup sink
     * (cli_utils.py:161-170: `--backup-dir` persists the raw page next to the
     * extraction output): each bucket's raw html payloads land in
     * `html-bucket-N`, committed by the same atomic manifest as the
@@ -193,34 +199,37 @@ object ExtractPipeline {
         val bucketPath = s"$stagedDir/_bucket=$b"
         val part =
           if (new java.io.File(bucketPath).exists())
-            spark.read.schema(rowSchema).parquet(bucketPath).as[DocRow]
+            spark.read.schema(rowSchema).parquet(literalGlob(bucketPath)).as[DocRow]
           else spark.emptyDataset[DocRow]
         val scannedFiles = part.inputFiles.length
         val out =
           if (skewThresholdBytes > 0) extractDocsSkewAware(part, options, skewThresholdBytes)
           else extractDocs(part, options)
         val target = s"$outDir/bucket-$b"
-        out.write.mode("overwrite").parquet(target)
+        val obs = Observation()
+        out.observe(obs, count(lit(1)).as("docs"),
+          coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)).as("ok"),
+          coalesce(sum(size(col("spans"))), lit(0L)).as("spans"),
+          coalesce(sum(col("kernel_us")), lit(0L)).as("kernel_us"))
+          .write.mode("overwrite").parquet(target)
+        val stats = obs.get
         if (htmlBackup) {
-          import spark.implicits._
           part.map(r => (r.doc_id, htmlPayload(r.spans)))
             .toDF("doc_id", "html")
             .write.mode("overwrite").parquet(s"$outDir/html-bucket-$b")
         }
-        // metrics read back from the committed files (cheap: parquet footers)
-        val stats = spark.read.parquet(target)
-          .agg(count(lit(1)), coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
-            coalesce(sum(size(col("spans"))), lit(0L)), coalesce(sum(col("kernel_us")), lit(0L)))
-          .collect()(0)
-        val durMs = (System.nanoTime() - t0) / 1000000
-        val json =
-          s"""{"bucket":$b,"docs":${stats.getLong(0)},"ok":${stats.getLong(1)},""" +
-            s""""spans":${stats.getLong(2)},"kernel_us":${stats.getLong(3)},""" +
-            s""""wall_ms":$durMs,"input":"hash(doc_id) % $buckets == $b",""" +
-            s""""scan_path":"$bucketPath","scanned_files":$scannedFiles}"""
-        val tmp = new java.io.File(s"$outDir/_commits/.bucket-$b.json.tmp")
-        java.nio.file.Files.writeString(tmp.toPath, json)
-        tmp.renameTo(manifest) // atomic commit
+        val fields = new java.util.LinkedHashMap[String, Any]
+        fields.put("bucket", b)
+        Seq("docs", "ok", "spans", "kernel_us").foreach(k => fields.put(k, stats(k)))
+        fields.put("wall_ms", (System.nanoTime() - t0) / 1000000)
+        fields.put("input", s"hash(doc_id) % $buckets == $b")
+        fields.put("scan_path", bucketPath)
+        fields.put("scanned_files", scannedFiles)
+        val tmp = java.nio.file.Paths.get(s"$outDir/_commits/.bucket-$b.json.tmp")
+        java.nio.file.Files.writeString(tmp, manifestJson.writeValueAsString(fields))
+        // atomic commit: a failed move throws instead of reporting the bucket
+        java.nio.file.Files.move(tmp, manifest.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         written += target
       }
     }

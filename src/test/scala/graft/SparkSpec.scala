@@ -63,6 +63,95 @@ class SparkSpec extends AnyFunSuite {
     assert(routed.keys.exists(_.startsWith("mega-")))
   }
 
+  test("skew router: docs above the threshold land in partitions [n, 2n), the rest below n") {
+    import spark.implicits._
+    val docs = DocsTables.docsTableSkewed(spark, sf, factor = 1, k = 2, sectionsPerMega = 300)
+    val threshold = 50000
+    // the router's weight, measured here: characters of every span's text
+    val weight = docs.collect().map { r =>
+      r.doc_id -> r.spans.map(s => Option(s.text).fold(0L)(t => t.codePointCount(0, t.length).toLong)).sum
+    }.toMap
+    val n = 4
+    val placed = ExtractPipeline.extractDocsSkewAware(docs, opts, threshold, bulkPartitions = n)
+      .select(org.apache.spark.sql.functions.spark_partition_id(), $"doc_id").as[(Int, String)]
+      .collect()
+    assert(placed.map(_._2).sorted.toSeq == weight.keys.toSeq.sorted)
+    val (heavy, light) = placed.partition { case (_, id) => weight(id) > threshold }
+    assert(heavy.nonEmpty && light.nonEmpty)
+    assert(heavy.forall { case (pid, _) => pid >= n && pid < 2 * n }, heavy.toSeq)
+    assert(light.forall { case (pid, _) => pid >= 0 && pid < n })
+  }
+
+  private def manifestOf(dir: String, b: Int): com.fasterxml.jackson.databind.JsonNode =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/_commits/bucket-$b.json")))
+
+  /** Each manifest's metrics equal an aggregate read back from its bucket. */
+  private def assertManifestsMatchOutput(dir: String, buckets: Int): Unit = {
+    import org.apache.spark.sql.functions._
+    (0 until buckets).foreach { b =>
+      val m = manifestOf(dir, b)
+      val r = spark.read.parquet(s"$dir/bucket-$b")
+        .agg(count(lit(1)), coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
+          coalesce(sum(size(col("spans"))), lit(0L)), coalesce(sum(col("kernel_us")), lit(0L)))
+        .collect()(0)
+      assert(m.get("bucket").asInt == b)
+      Seq("docs", "ok", "spans", "kernel_us").zipWithIndex.foreach { case (k, i) =>
+        assert(m.get(k).asLong == r.getLong(i), s"bucket $b $k")
+      }
+    }
+  }
+
+  test("commit log: manifest metrics equal the committed output, empty buckets too") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-observe").toString
+    val input = DocsTables.docsTableSkewed(spark, sf, factor = 1, k = 2, sectionsPerMega = 300)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 4,
+      skewThresholdBytes = 50000)
+    assertManifestsMatchOutput(dir, 4)
+    assert((0 until 4).map(manifestOf(dir, _).get("docs").asLong).sum == input.count())
+    // more buckets than docs: the empty buckets commit zero metrics
+    val tiny = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    ExtractPipeline.runWithCommitLog(spark, DocsTables.docsTable(spark, sf).limit(3), tiny,
+      opts, buckets = 8, skewThresholdBytes = 50000)
+    assertManifestsMatchOutput(tiny, 8)
+    val docs = (0 until 8).map(manifestOf(tiny, _).get("docs").asLong)
+    assert(docs.sum == 3 && docs.count(_ == 0) >= 5)
+  }
+
+  test("commit log: at most two Spark jobs per bucket with the skew router") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val input = DocsTables.docsTableSkewed(spark, sf, factor = 1, k = 2, sectionsPerMega = 300)
+    val buckets = 4
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets, skewThresholdBytes = 50000)
+    // rerun every bucket against the staged table: only bucket jobs remain
+    (0 until buckets).foreach(b => new java.io.File(s"$dir/_commits/bucket-$b.json").delete())
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val written = ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets,
+        skewThresholdBytes = 50000)
+      assert(written.length == buckets)
+      org.apache.spark.ListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 2 * buckets, s"${jobs.get} jobs for $buckets buckets")
+  }
+
+  test("commit log: manifests are valid JSON for an output path with quotes and backslashes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-\"odd\\path").toString
+    val input = DocsTables.docsTable(spark, sf)
+    ExtractPipeline.runWithCommitLog(spark, input, dir, opts, buckets = 2)
+    (0 until 2).foreach { b =>
+      assert(manifestOf(dir, b).get("scan_path").asText == s"$dir/_staged/_bucket=$b")
+    }
+    assert((0 until 2).map(manifestOf(dir, _).get("docs").asLong).sum == input.count())
+  }
+
   test("commit log: second run skips committed buckets, output complete") {
     val dir = java.nio.file.Files.createTempDirectory("graft-commit").toString
     val input = DocsTables.docsTable(spark, sf)
